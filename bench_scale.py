@@ -313,13 +313,14 @@ def run_skew_torture() -> None:
     pathological key distribution, at equal volume with a uniform
     twin:
 
-    * lane A (pk_hash, partitioned data): ONE partition value holds
-      50% of all rows. The full-outer hash-compare joins on the pk
-      (unique → no join hot key by construction) and the partition
-      digest is a combinable groupBy (map-side partial agg absorbs
-      the hot value before the shuffle) — the claim to demonstrate is
-      wall-time parity with the uniform twin, not a skew-split.
-    * lane B (join_mode='hash'): 1/3 of rows share IDENTICAL content,
+    * lane A (diff_keys + apply_delta merge, partitioned data): ONE
+      partition value holds 50% of all rows. The full-outer key
+      compare joins on the pk (unique → no join hot key by
+      construction) and the partition digest is a combinable groupBy
+      (map-side partial agg absorbs the hot value before the shuffle)
+      — the claim to demonstrate is wall-time parity with the uniform
+      twin, not a skew-split.
+    * lane B (hash-mode anti-joins): 1/3 of rows share IDENTICAL content,
       so the content-hash join key itself floods. This is the lane
       where AQE's skew-join split must ENGAGE — plan-gated by
       `skew=true` on the executed SortMergeJoin.
@@ -336,7 +337,14 @@ def run_skew_torture() -> None:
     Done-bar: lane A and lane B each within ~2x of their uniform
     twin, and lane B's plan shows the split.
     """
-    from mysql_syncer_spark.diff import diff_tables, merge_tables
+    from mysql_syncer_spark.canon import with_row_hash
+    from mysql_syncer_spark.diff import (
+        apply_delta,
+        diff_keys,
+        excess_rows,
+        missing_rows,
+        rows_to_copy,
+    )
 
     spark = (
         configure_session(
@@ -375,7 +383,7 @@ def run_skew_torture() -> None:
 
     def base_flood(flooded: bool):
         # the hash-mode adversary: 1/3 of rows are byte-IDENTICAL full
-        # rows (same pk, same content) — in join_mode='hash' the row
+        # rows (same pk, same content) — in mode='hash' the row
         # hash IS the join key (it covers the pk too, so merely
         # duplicated content with distinct pks never collides; full-row
         # duplicates are the only true flood, the no-PK-table shape)
@@ -407,12 +415,16 @@ def run_skew_torture() -> None:
         )
 
     out = {}
-    # ---- lane A: pk_hash merge under the 50%-hot partition value ----
+    # ---- lane A: the sync merge under the 50%-hot partition value --
     for tag, skewed in (("uniform", False), ("hot_partition", True)):
         m = base_grp(skewed)
         s = perturb(m)
         t0 = time.time()
-        merged = merge_tables(m, s, ["id"])
+        tagged = diff_keys(
+            with_row_hash(m, ["id"]), with_row_hash(s, ["id"]), ["id"]
+        )
+        inserts = rows_to_copy(m, tagged.where(F.col("op") != "delete"), ["id"])
+        merged = apply_delta(s, inserts, tagged, ["id"])
         assert merged.count() == n
         out[f"merge_pk_hash_{tag}_sec"] = round(time.time() - t0, 3)
     # ---- lane B: hash-mode diff under the full-row duplicate flood --
@@ -421,14 +433,16 @@ def run_skew_torture() -> None:
         m = base_flood(dup)
         s = perturb(m)
         t0 = time.time()
-        d = diff_tables(m, s, ["id"], mode="hash")
-        ins = d["insert"].count()
+        mh, sh = with_row_hash(m, ["id"]), with_row_hash(s, ["id"])
+        ins = rows_to_copy(m, missing_rows(mh, sh, ["id"], mode="hash"),
+                           ["id"]).count()
         # execute the delete df's OWN QueryExecution so the captured
         # plan is the final adaptive one (a .count() builds a new QE)
-        dele = len(d["delete"].collect())
+        deletes = excess_rows(mh, sh, ["id"], mode="hash")
+        dele = len(deletes.collect())
         out[f"diff_hash_{tag}_sec"] = round(time.time() - t0, 3)
         out[f"diff_hash_{tag}_delta"] = int(ins + dele)
-        plans[tag] = _executed_plan(d["delete"])
+        plans[tag] = _executed_plan(deletes)
     out["hash_flood_skew_splits"] = plans["hash_flood"].count("skew=true")
     out["hash_flood_skewed_reads"] = plans["hash_flood"].count(
         "AQEShuffleRead skewed"

@@ -5,7 +5,7 @@ A from-scratch re-expression of the semantics of iRAP-software/MySQL-Syncer
 
 * catalog diff / schema diff        -> driver-side set ops + StructType compare
 * whole-table digest short-circuit  -> order-independent commutative digests
-* hash-based row diff               -> md5 row hash + left_anti joins
+* hash-based row diff               -> md5 row hash + one full-outer key compare
 * chunked merge                     -> partitioned writes / JDBC batches
 * partition-wise sync               -> partition pruning + groupBy digests
 * process-pool parallelism          -> FAIR scheduler + ThreadPoolExecutor
@@ -25,7 +25,7 @@ from mysql_syncer_spark.diff import (
     excess_rows,
     changed_rows,
     rows_to_copy,
-    diff_tables,
+    diff_keys,
 )
 from mysql_syncer_spark.config import SyncConfig, TableHandle
 
@@ -38,7 +38,7 @@ __all__ = [
     "excess_rows",
     "changed_rows",
     "rows_to_copy",
-    "diff_tables",
+    "diff_keys",
     "SyncConfig",
     "TableHandle",
 ]

@@ -76,8 +76,6 @@ def build_parser() -> argparse.ArgumentParser:
                        help="plan + count deltas, mutate nothing")
         p.add_argument("--parallel", type=int, default=8,
                        help="concurrent table syncs (1 = serial)")
-        p.add_argument("--join-mode", choices=("pk_hash", "hash"),
-                       default="pk_hash")
         p.add_argument("--cpus", default="*",
                        help="local[N] cores when the CLI owns the session")
         p.add_argument("--shuffle-partitions", type=int, default=32)
@@ -310,7 +308,6 @@ def _catalogs(spark, args) -> tuple[ParquetCatalog, ParquetCatalog, SyncConfig]:
         sync_shared_partitions=not args.no_shared_partitions,
         copy_tables_with_no_primary=not args.no_copy_no_pk,
         max_parallel_tables=args.parallel,
-        join_mode=args.join_mode,
         dry_run=args.dry_run,
     )
     master = ParquetCatalog(spark, args.master, pk_map=pk_map or None,

@@ -51,8 +51,6 @@ class SyncConfig:
     chunk_size: int = 5000
     #: concurrent sync units (reference: ThreadWrapper.jar <cores>)
     max_parallel_tables: int = 8
-    #: 'hash' = reference-faithful content-set diff; 'pk_hash' = strict
-    join_mode: str = "pk_hash"
     #: write every planned mutation to a changelog instead of applying
     #: (generalizes LOG_QUERIES, settings.php.tmpl:25-30)
     dry_run: bool = False

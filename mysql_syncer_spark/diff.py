@@ -3,18 +3,28 @@
 The reference materializes per-row hash maps into a scratch "sync" database
 and computes two anti-joins with ``NOT IN`` subqueries over indexed hash
 columns (src/project/Synchronizer.php:446-524 missing rows, :531-583 excess
-rows). Here the hash maps are lazy DataFrames and the anti-joins are
-Catalyst ``left_anti`` joins — broadcast when one side is small, shuffled
-hash join otherwise, with AQE skew handling for free.
+rows). Here the hash maps are lazy DataFrames and the joins are Catalyst
+joins — broadcast when one side is small, shuffled otherwise, with AQE
+skew handling for free.
 
-Two join modes (SURVEY.md §2.3 J7):
+One compare kernel: :func:`diff_keys` full-outer joins the two
+``(pk..., hash)`` projections once and tags each differing key ``insert``
+(master only), ``delete`` (slave only) or ``update`` (both, hash
+differs). The executor derives everything from that narrow frame: the
+delta counts, the upsert keys (``op != 'delete'``), the delete keys
+(``op != 'insert'``) and the key set :func:`apply_delta` anti-joins out.
+Because the row hash covers the PK columns, a per-PK compare and a
+(pk, hash) compare agree on every PK-unique table.
 
-* ``on="hash"`` (reference-faithful): set semantics on row *content* —
+The anti-join primitives :func:`missing_rows` / :func:`excess_rows`
+remain for the reference-faithful query keys and keep both join modes
+(SURVEY.md §2.3 J7):
+
+* ``mode="hash"`` (reference-faithful): set semantics on row *content* —
   duplicate-content rows with different PKs share a hash and are treated
   as one. This is exactly the reference's ``hash NOT IN (...)`` behavior.
-* ``on="pk_hash"`` (strict): a row is "same" only if PK *and* hash match —
-  catches content that moved between PKs. The mode the sync executor uses,
-  since it must produce per-PK actions anyway.
+* ``mode="pk_hash"`` (strict): a row is "same" only if PK *and* hash
+  match — catches content that moved between PKs.
 """
 
 from __future__ import annotations
@@ -24,7 +34,7 @@ from typing import Literal, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mysql_syncer_spark.canon import HASH_COL, with_row_hash
+from mysql_syncer_spark.canon import HASH_COL
 
 JoinMode = Literal["hash", "pk_hash"]
 
@@ -73,7 +83,8 @@ def changed_rows(
     """PKs present on BOTH sides whose hash differs → delete+reinsert pair.
 
     Not a distinct operator in the reference (a changed row simply shows up
-    in both anti-joins); exposed separately because the executor wants it.
+    in both anti-joins); the executor gets these keys as ``update`` tags
+    from :func:`diff_keys`.
     """
     m = master_hashes.select(*pk_cols, F.col(HASH_COL).alias("m_hash"))
     s = slave_hashes.select(*pk_cols, F.col(HASH_COL).alias("s_hash"))
@@ -93,90 +104,54 @@ def rows_to_copy(
     return master.join(keys, on=list(pk_cols), how="left_semi")
 
 
-def diff_tables(
-    master: DataFrame,
-    slave: DataFrame,
+#: name of the tag column :func:`diff_keys` adds
+OP_COL = "op"
+
+
+def diff_keys(
+    master_hashes: DataFrame,
+    slave_hashes: DataFrame,
     pk_cols: Sequence[str],
-    hash_cols: Sequence[str] | None = None,
-    mode: JoinMode = "pk_hash",
-) -> dict[str, DataFrame]:
-    """One-call table diff: the full §3.2 hot path as lazy plans.
-
-    Returns {"insert": rows (full master rows to append),
-             "delete": keys (slave PKs to remove),
-             "master_hashes"/"slave_hashes": the hash projections}.
-
-    In pk_hash mode a changed row lands in both insert and delete (the
-    reference's delete-before-insert ordering, Synchronizer.php:496-517,
-    is preserved by the executor applying deletes first).
-    """
-    mh = with_row_hash(master, pk_cols, hash_cols)
-    sh = with_row_hash(slave, pk_cols, hash_cols)
-    miss = missing_rows(mh, sh, pk_cols, mode)
-    exc = excess_rows(mh, sh, pk_cols, mode)
-    return {
-        "insert": rows_to_copy(master, miss, pk_cols),
-        "delete": exc,
-        "master_hashes": mh,
-        "slave_hashes": sh,
-    }
-
-
-def merge_tables(
-    master: DataFrame,
-    slave: DataFrame,
-    pk_cols: Sequence[str],
-    hash_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Single-pass sync merge: the content slave must hold so that
-    slave ≡ master, built from ONE narrow full-outer hash-compare.
+    """The row-hash compare: ONE full-outer join of the two
+    ``(pk..., __row_hash)`` projections, returning only the differing
+    keys as a narrow ``(pk..., op)`` frame.
 
-    Topology (the at-scale shape — compare diff_tables+apply_delta,
-    whose naive lazy composition re-scans the base tables ~18×):
-
-      mh, sh         — narrow (pk, hash) projections, one scan each
-      j = mh ⟗ sh    — full outer on PK, carries only pk + 2 hashes
-      take_master    — master ⋉ σ(j: slave missing OR hash differs)
-      keep_slave     — slave  ⋉ σ(j: both present AND hash equal)
-      merged         — take_master ∪ keep_slave
-
-    The two σ(j) branches share an identical join subtree, so Spark's
-    ReuseExchange materializes it once. Excess slave rows simply match
-    neither branch (delete-by-omission); changed rows take the master
-    version — the reference's delete-before-insert guarantee
-    (Synchronizer.php:496-517) holds structurally.
+    ``op`` is ``insert`` (master only → the reference's missing rows,
+    Synchronizer.php:446-524), ``delete`` (slave only → excess rows,
+    :531-583) or ``update`` (both, hash differs → delete + reinsert,
+    the delete-before-insert pair of Synchronizer.php:496-517).
     """
     on = list(pk_cols)
-    mh = with_row_hash(master, pk_cols, hash_cols, hash_name="m_hash")
-    sh = with_row_hash(slave, pk_cols, hash_cols, hash_name="s_hash")
-    j = mh.join(sh, on=on, how="full_outer")
-    from_master = j.where(
-        F.col("s_hash").isNull() | (F.col("m_hash") != F.col("s_hash"))
-    ).select(*on)
-    from_slave = j.where(
-        F.col("m_hash").isNotNull() & (F.col("m_hash") == F.col("s_hash"))
-    ).select(*on)
-    return master.join(from_master, on=on, how="left_semi").unionByName(
-        slave.join(from_slave, on=on, how="left_semi").select(*master.columns)
+    m = master_hashes.select(*on, F.col(HASH_COL).alias("m_hash"))
+    s = slave_hashes.select(*on, F.col(HASH_COL).alias("s_hash"))
+    op = (
+        F.when(F.col("s_hash").isNull(), F.lit("insert"))
+        .when(F.col("m_hash").isNull(), F.lit("delete"))
+        .when(F.col("m_hash") != F.col("s_hash"), F.lit("update"))
+    )
+    return (
+        m.join(s, on=on, how="full_outer")
+        .select(*on, op.alias(OP_COL))
+        .where(F.col(OP_COL).isNotNull())
     )
 
 
 def apply_delta(
     slave: DataFrame,
     inserts: DataFrame,
-    delete_keys: DataFrame,
+    keys: DataFrame,
     pk_cols: Sequence[str],
 ) -> DataFrame:
-    """Pure-DataFrame merge: (slave ⟕̸ delete_keys) ∪ inserts.
+    """Pure-DataFrame merge: (slave ⟕̸ keys) ∪ inserts.
 
     File-mode equivalent of the reference's chunked DELETE + INSERT
-    (TableConnection.php:289-387): anti-join out doomed/changed PKs, then
-    union the new versions. Delete-before-insert is inherent here — the
-    anti-join removes the old PK before the union adds the new row, so the
-    partition-move guard (Synchronizer.php:496-517) holds by construction.
+    (TableConnection.php:289-387). ``keys`` must cover every PK that is
+    deleted OR (re)inserted — :func:`diff_keys`' whole tagged frame
+    does — so ONE anti-join removes both the doomed rows and the old
+    versions of changed rows before the union adds the new ones.
+    Delete-before-insert is inherent: the partition-move guard
+    (Synchronizer.php:496-517) holds by construction.
     """
-    kept = slave.join(delete_keys, on=list(pk_cols), how="left_anti")
-    # a changed row's old version must also go away: anti-join on the PKs
-    # of incoming inserts as well (same PK, new content).
-    kept = kept.join(inserts.select(*pk_cols), on=list(pk_cols), how="left_anti")
+    kept = slave.join(keys.select(*pk_cols), on=list(pk_cols), how="left_anti")
     return kept.unionByName(inserts.select(*slave.columns))

@@ -147,13 +147,10 @@ _DIGEST_AGG = (
 )
 
 
-def _side_digest(df: DataFrame, cols: Sequence[str]) -> tuple:
-    r = (
-        df.selectExpr(fast_hash_sql(df, cols) + " as h")
-        .selectExpr(*_DIGEST_AGG)
-        .first()
+def _side_digest(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    return df.selectExpr(fast_hash_sql(df, cols) + " as h").selectExpr(
+        *_DIGEST_AGG
     )
-    return (r["hash_sum"], r["hash_xor"], r["row_count"])
 
 
 def digests_equal(a: DataFrame, b: DataFrame,
@@ -163,23 +160,19 @@ def digests_equal(a: DataFrame, b: DataFrame,
     side); column order is pinned to ``a``'s so both sides hash the same
     column sequence.
 
-    The two sides run as CONCURRENT jobs on two driver threads: a noop
-    re-sync is bounded by query *planning* latency, not scan time (the
-    scalar agg is one stage), so overlapping the two plans ~halves the
-    per-table gate cost. A scalar agg always yields exactly one row —
-    an empty side digests to (NULL, NULL, 0), so empty==empty and
-    empty!=nonempty fall out of the tuple compare.
+    Both sides' scalar aggs run in ONE ``union(...).collect()`` on the
+    caller's thread: their scan stages run concurrently inside that one
+    query, and every job inherits the caller's job group and FAIR pool.
+    A scalar agg always yields exactly one row — an empty side digests
+    to (NULL, NULL, 0), so empty==empty and empty!=nonempty fall out of
+    the row compare.
     """
     if cols is None:
         if set(a.columns) != set(b.columns):
             return False  # schema drift can never digest-match
         cols = a.columns
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as pool:
-        fa = pool.submit(_side_digest, a, cols)
-        fb = pool.submit(_side_digest, b, cols)
-        return fa.result() == fb.result()
+    ra, rb = _side_digest(a, cols).union(_side_digest(b, cols)).collect()
+    return ra == rb
 
 
 def partition_digests(

@@ -1,15 +1,15 @@
 """Sync executor — applies a SyncPlan and reports what it did.
 
 Parquet ("file") mode is the primary path: mutations are expressed as
-pure-DataFrame rewrites (anti-join out deletes, union in inserts) and an
-atomic overwrite of the slave table. JDBC-mode deletes/inserts (the
+pure-DataFrame rewrites (anti-join out the differing keys, union in the
+master's rows) and an atomic overwrite of the slave table. JDBC-mode deletes/inserts (the
 reference's chunked DELETE ... IN / multi-row INSERT,
 src/project/TableConnection.php:289-387) are in sinks/jdbc.py.
 
 Control flow per table mirrors the reference hot path
 (Synchronizer.php:193-230 / SURVEY.md §3.2):
 
-  schema compare → digest short-circuit → hash maps → anti-joins → apply
+  schema compare → digest short-circuit → hash maps → key compare → apply
 
 Parallelism: one thread per sync unit submitting independent Spark jobs
 (FAIR scheduler pool), replacing the reference's one-OS-process-per-table
@@ -27,10 +27,12 @@ import traceback
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
 
+from mysql_syncer_spark.canon import HASH_COL, with_row_hash
 from mysql_syncer_spark.config import SyncConfig, TableHandle
-from mysql_syncer_spark.diff import apply_delta, diff_tables
+from mysql_syncer_spark.diff import OP_COL, apply_delta, diff_keys, rows_to_copy
 from mysql_syncer_spark.digest import digests_equal, differing_partitions
 from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
 from mysql_syncer_spark.sinks import jdbc
@@ -168,7 +170,7 @@ class ParquetSyncExecutor:
         if unit.action == Action.DIFF_SYNC_PARTITIONED and unit.partition_col:
             self._diff_sync_partitioned(unit, m, s, res)
             return
-        self._apply_diff(unit.table, m.df, s.df, m.pk_cols, res)
+        self._row_diff(unit.table, m.df, s.df, m.pk_cols, res, s.df)
 
     def _diff_sync_pushdown(self, unit: SyncUnit, res: UnitResult) -> None:
         """Minimal-egress diff (SURVEY §4 row 2): the master computes the
@@ -176,17 +178,15 @@ class ParquetSyncExecutor:
         hash-map staging, TableConnection.php:46-51), so only
         (pk, 32-byte hash) crosses the wire; the slave side hashes
         locally with the byte-compatible MySQL text-protocol renderer.
-        Full rows travel only for the missing keys, via chunked keyed
-        point fetches (TableConnection.php:177-209) when the master
-        supports them. No separate digest short-circuit: an unchanged
-        table yields empty anti-joins from the hash maps alone, which is
-        already the minimal wire cost in this mode. Partitioned tables
+        Full rows travel only for the missing and changed keys, via
+        chunked keyed point fetches (TableConnection.php:177-209) when
+        the master supports them. No separate digest short-circuit: an unchanged
+        table yields an empty key compare from the hash maps alone, which
+        is already the minimal wire cost in this mode. Partitioned tables
         (DIFF_SYNC_PARTITIONED) also take this path whole-table: the
         hash map IS the per-partition staging content (S16/S17), and
         partition pruning would only trim an already-minimal
         (pk, hash) transfer."""
-        from mysql_syncer_spark.canon import HASH_COL
-        from mysql_syncer_spark.diff import excess_rows, missing_rows, rows_to_copy
         from mysql_syncer_spark.digest import mysql_compat_row_hash_col
 
         table = unit.table
@@ -210,44 +210,16 @@ class ParquetSyncExecutor:
         sh = s.df.select(
             *pk, mysql_compat_row_hash_col(s.df, cols).alias(HASH_COL)
         )
-        miss = missing_rows(mh, sh, pk, mode="pk_hash").persist()
-        exc = excess_rows(mh, sh, pk, mode="pk_hash").persist()
-        spill = None
-        try:
-            # delta sizes via distributed counts — the driver never
-            # holds the key list whole (a first sync or bulk reload has
-            # a delta the size of the table)
-            res.inserted = miss.count()
-            res.deleted = exc.count()
-            if res.inserted == 0 and res.deleted == 0:
-                res.status = "noop"
-                return
-            if self.cfg.dry_run and self._stmt_log is None:
-                res.status = "dry_run"
-                return
-            # a statement log needs the full insert rows even under
-            # dry_run (the file must be replayable), so the keyed fetch
-            # runs before the dry_run return in that mode
+
+        def fetch(keys):
             if hasattr(self.master, "fetch_rows"):
-                inserts, spill = self._stream_keyed_fetch(table, miss, pk)
-            else:
-                inserts = rows_to_copy(self.master.table(table).df, miss, pk)
-            self._log_delta(table, pk, inserts, exc)
-            if self.cfg.dry_run:
-                res.status = "dry_run"
-                return
-            self._apply_changes(table, pk, inserts, exc, s.df)
-            self.slave.invalidate()
-        finally:
-            miss.unpersist()
-            exc.unpersist()
-            if spill is not None:
-                import shutil
+                return self._stream_keyed_fetch(table, keys, pk)
+            return rows_to_copy(self.master.table(table).df, keys, pk), None
 
-                shutil.rmtree(spill, ignore_errors=True)
+        self._apply_diff(table, pk, res, diff_keys(mh, sh, pk), fetch, s.df)
 
-    def _stream_keyed_fetch(self, table: str, miss, pk: list):
-        """Bounded-memory keyed fetch: stream the missing-key frame
+    def _stream_keyed_fetch(self, table: str, keys, pk: list):
+        """Bounded-memory keyed fetch: stream the upsert-key frame
         through the driver chunk-wise (``toLocalIterator`` holds at
         most one partition), issue the master's chunked
         ``WHERE (pk...) IN`` point fetch per ``chunk_size`` keys, and
@@ -280,6 +252,9 @@ class ParquetSyncExecutor:
         chunk_size = self.cfg.chunk_size
         workers = max(1, int(self.cfg.max_parallel_tables))
 
+        # the pool threads run Spark jobs (fetch_rows builds a frame and
+        # writes it): carry the caller's job group, FAIR pool and tags
+        @inheritable_thread_target(self.spark)
         def fetch_one(idx: int, keys: list) -> str:
             rows = self.master.fetch_rows(
                 table, keys, pk, chunk_size=chunk_size
@@ -317,7 +292,7 @@ class ParquetSyncExecutor:
                     chunk.clear()
 
                 try:
-                    for r in miss.toLocalIterator():
+                    for r in keys.toLocalIterator():
                         chunk.append(tuple(r))
                         if len(chunk) >= chunk_size:
                             submit()
@@ -331,8 +306,6 @@ class ParquetSyncExecutor:
         except BaseException:
             # the caller only learns the spill path from our return
             # value — on an error it never does, so clean up here
-            import shutil
-
             shutil.rmtree(spill, ignore_errors=True)
             raise
         if not dirs:
@@ -375,36 +348,70 @@ class ParquetSyncExecutor:
         # delete-before-insert partition-move guard (apply_delta).
         mdf = m.df.where(F.col(pcol).isin(values))
         sdf = s.df.where(F.col(pcol).isin(values))
-        self._apply_diff(unit.table, mdf, sdf, m.pk_cols, res,
-                         full_slave=s.df, scope=(pcol, values))
+        self._row_diff(unit.table, mdf, sdf, m.pk_cols, res, s.df)
 
-    def _apply_diff(self, table: str, mdf, sdf, pk_cols, res: UnitResult,
-                    full_slave=None, scope=None) -> None:
-        d = diff_tables(mdf, sdf, pk_cols, mode=self.cfg.join_mode)
-        inserts = d["insert"].persist()
-        deletes = d["delete"].persist()
+    def _row_diff(self, table: str, mdf, sdf, pk_cols, res: UnitResult,
+                  target) -> None:
+        """The plain path: both sides hash in executors and the upsert
+        rows come from the master frame itself."""
+        tagged = diff_keys(
+            with_row_hash(mdf, pk_cols), with_row_hash(sdf, pk_cols), pk_cols
+        )
+        self._apply_diff(
+            table, pk_cols, res, tagged,
+            lambda keys: (rows_to_copy(mdf, keys, pk_cols), None), target,
+        )
+
+    def _apply_diff(self, table: str, pk_cols, res: UnitResult, tagged,
+                    fetch_inserts, target) -> None:
+        """The one diff skeleton behind the plain and the pushdown path:
+        counts → noop / dry-run → statement log and changelog → apply.
+        ``tagged`` is :func:`diff_keys`' ``(pk..., op)`` frame;
+        ``fetch_inserts`` maps the upsert keys to ``(insert rows, spill
+        dir or None)`` — the only step in which the two paths differ.
+        ``target`` is the slave frame the parquet merge rewrites."""
+        tagged = tagged.persist()
+        spill = None
         try:
-            res.inserted = inserts.count()
-            res.deleted = deletes.count()
-            if res.inserted == 0 and res.deleted == 0:
+            # both delta sizes from ONE distributed groupBy — the driver
+            # never holds the key list (a first sync or bulk reload has
+            # a delta the size of the table); a changed row counts as
+            # one insert plus one delete
+            n = dict(tagged.groupBy(OP_COL).count().collect())
+            res.inserted = n.get("insert", 0) + n.get("update", 0)
+            res.deleted = n.get("delete", 0) + n.get("update", 0)
+            if not n:
                 res.status = "noop"
                 return
+            if (self.cfg.dry_run and self._stmt_log is None
+                    and self.cfg.changelog_path is None):
+                res.status = "dry_run"
+                return
+            # the log sinks need the full insert rows even under dry_run
+            # (a statement log must replay), so the fetch runs first
+            op = F.col(OP_COL)
+            inserts, spill = fetch_inserts(
+                tagged.where(op != "delete").select(*pk_cols)
+            )
+            deletes = tagged.where(op != "insert").select(*pk_cols)
             self._log_delta(table, pk_cols, inserts, deletes)
             if self.cfg.dry_run:
                 res.status = "dry_run"
                 return
-            target = full_slave if full_slave is not None else sdf
-            self._apply_changes(table, pk_cols, inserts, deletes, target)
+            self._apply_changes(table, pk_cols, inserts, deletes, tagged,
+                                target)
             self.slave.invalidate()
         finally:
-            inserts.unpersist()
-            deletes.unpersist()
+            tagged.unpersist()
+            if spill is not None:
+                shutil.rmtree(spill, ignore_errors=True)
 
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target) -> None:
+    def _apply_changes(self, table, pk_cols, inserts, deletes, tagged,
+                       target) -> None:
         """Materialize the delta on the slave. Parquet mode: pure-DataFrame
-        merge + atomic file overwrite. Overridden by the SQL-target
-        executor with distributed DELETE/INSERT statement batches."""
-        merged = apply_delta(target, inserts, deletes, pk_cols)
+        merge (one anti-join on every tagged key) + atomic file
+        overwrite. Overridden by the SQL-target executors."""
+        merged = apply_delta(target, inserts, tagged, pk_cols)
         self.slave.write_table(merged, table)
 
     # -- driver --------------------------------------------------------
@@ -480,9 +487,7 @@ class ParquetSyncExecutor:
             if digests_equal(mdf, sdf):
                 res.status = "noop"
             else:
-                self._apply_diff(
-                    table, mdf, sdf, m.pk_cols, res, full_slave=s.df
-                )
+                self._row_diff(table, mdf, sdf, m.pk_cols, res, s.df)
         except Exception as e:
             res.status = "error"
             res.error = f"{e}\n{traceback.format_exc(limit=5)}"
@@ -578,7 +583,8 @@ class DBAPISyncExecutor(ParquetSyncExecutor):
         )
         self.slave.invalidate()
 
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target) -> None:
+    def _apply_changes(self, table, pk_cols, inserts, deletes, tagged,
+                       target) -> None:
         # delete-before-insert (Synchronizer.php:496-517): excess keys
         # first, then replace (which deletes the changed rows' old
         # versions chunk-locally before inserting the new ones).
@@ -619,8 +625,9 @@ class JDBCSyncExecutor(ParquetSyncExecutor):
       ``java.sql`` connection.
 
     Delete-before-insert ordering (Synchronizer.php:496-517) is kept:
-    the staged key set is the union of excess keys and changed-row
-    keys, deleted in one statement before the insert pass appends.
+    the staged key set is every tagged key of the diff (excess, changed
+    and missing), deleted in one statement before the insert pass
+    appends.
     """
 
     def __init__(self, master, slave, config: SyncConfig | None = None):
@@ -667,11 +674,10 @@ class JDBCSyncExecutor(ParquetSyncExecutor):
         self.slave.write_jdbc(m.df, unit.table)
         self.slave.invalidate()
 
-    def _apply_changes(self, table, pk_cols, inserts, deletes, target) -> None:
+    def _apply_changes(self, table, pk_cols, inserts, deletes, tagged,
+                       target) -> None:
         stage = f"__sync_keys_{table}"
-        keys = deletes.select(*pk_cols).unionByName(
-            inserts.select(*pk_cols)
-        ).distinct()
+        keys = tagged.select(*pk_cols)
         self._drop_if_exists(stage)
         # scratch DDL through our own type map (Spark's JDBC overwrite
         # would map StringType to CLOB, which Derby can't equi-compare)

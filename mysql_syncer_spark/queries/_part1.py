@@ -27,9 +27,10 @@ from mysql_syncer_spark.canon import (
     with_row_hash,
 )
 from mysql_syncer_spark.diff import (
+    apply_delta,
     changed_rows,
+    diff_keys,
     excess_rows,
-    merge_tables,
     missing_rows,
     rows_to_copy,
 )
@@ -186,12 +187,18 @@ def rows_to_copy_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sync_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end §3.2 hot path: diff master vs perturbed slave and
     produce the converged table — the result must equal master exactly
-    (the oracle is simply the master table). Uses the single-pass
-    merge_tables topology (one narrow full-outer hash-compare + two
-    semi joins — 6 base scans vs ~18 for the naive delta composition)."""
+    (the oracle is simply the master table). Runs the kernels the
+    parquet executor runs: one narrow full-outer key compare
+    (diff_keys), the upsert-row semi join and the one-anti-join merge
+    (apply_delta)."""
+    pk = ["o_orderkey"]
     orders = load_table(spark, sf_dir, "orders")
     slave = _slave_orders(orders)
-    return merge_tables(orders, slave, ["o_orderkey"])
+    tagged = diff_keys(
+        with_row_hash(orders, pk), with_row_hash(slave, pk), pk
+    )
+    inserts = rows_to_copy(orders, tagged.where(F.col("op") != "delete"), pk)
+    return apply_delta(slave, inserts, tagged, pk)
 
 
 @_register(

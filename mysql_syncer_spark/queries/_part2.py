@@ -26,7 +26,6 @@ from mysql_syncer_spark.canon import (
 from mysql_syncer_spark.diff import (
     changed_rows,
     excess_rows,
-    merge_tables,
     missing_rows,
     rows_to_copy,
 )

@@ -19,9 +19,9 @@ Plan shape (the at-scale property): closed history never joins anything
 meet in ONE narrow full-outer join on (pk, two hashes); the three key
 sets (keep / close / insert) are filters over that same join subtree, so
 Spark materializes the exchange once (ReusedExchange) and the semi joins
-that fetch full rows broadcast the key sets when small. This is exactly
-:func:`mysql_syncer_spark.diff.merge_tables`'s topology with a third
-output branch.
+that fetch full rows broadcast the key sets when small. This is the
+compare of :func:`mysql_syncer_spark.diff.diff_keys` with a third
+(keep) output branch.
 """
 
 from __future__ import annotations

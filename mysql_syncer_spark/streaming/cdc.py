@@ -8,8 +8,8 @@ target table incrementally:
   to its latest change per key (ROW_NUMBER over the CDC ordering
   column), then apply delete-before-insert to the target — the same
   ordering guarantee the reference enforces for partition moves
-  (Synchronizer.php:496-517), reused from diff.apply_delta's anti-join
-  construction.
+  (Synchronizer.php:496-517), by the same one-anti-join-then-union
+  construction as diff.apply_delta.
 * :func:`cdc_merge_stream` — wires the kernel into a Structured
   Streaming query with ``foreachBatch`` (the canonical Spark pattern for
   streaming MERGE into a non-streaming sink). ``Trigger.AvailableNow``

@@ -1,4 +1,4 @@
-"""Diff kernel: missing/excess/changed rows, digests, apply_delta.
+"""Diff kernel: diff_keys, missing/excess/changed rows, digests, apply_delta.
 
 Per-PK diff tests run on ``orders`` (o_orderkey IS unique in the fixtures).
 ``lineitem`` has no unique key (FIXTURES.md overstates its composite PK:
@@ -14,9 +14,10 @@ from mysql_syncer_spark.canon import with_row_hash
 from mysql_syncer_spark.diff import (
     apply_delta,
     changed_rows,
-    diff_tables,
+    diff_keys,
     excess_rows,
     missing_rows,
+    rows_to_copy,
 )
 from mysql_syncer_spark.digest import (
     differing_partitions,
@@ -39,6 +40,18 @@ def _perturbed(orders):
         ),
     )
     return slave
+
+
+def _tag(master, slave, pk=PK):
+    return diff_keys(with_row_hash(master, pk), with_row_hash(slave, pk), pk)
+
+
+def _merge(master, slave, pk=PK):
+    """The executor's parquet merge: tagged compare, upsert rows, one
+    anti-join on every tagged key."""
+    tagged = _tag(master, slave, pk)
+    inserts = rows_to_copy(master, tagged.where(F.col("op") != "delete"), pk)
+    return apply_delta(slave, inserts, tagged, pk)
 
 
 def test_digest_equal_self(lineitem):
@@ -108,16 +121,56 @@ def test_duplicate_content_set_semantics(spark):
 
 def test_apply_delta_converges(spark, orders):
     slave = _perturbed(orders)
-    d = diff_tables(orders, slave, PK, mode="pk_hash")
-    merged = apply_delta(slave, d["insert"], d["delete"], PK)
+    merged = _merge(orders, slave)
     assert merged.count() == orders.count()
     # full equality via subtract both ways
     assert merged.subtract(orders).count() == 0
     assert orders.subtract(merged).count() == 0
     # idempotence: rediff finds nothing
-    d2 = diff_tables(orders, merged, PK, mode="pk_hash")
-    assert d2["insert"].count() == 0
-    assert d2["delete"].count() == 0
+    assert _tag(orders, merged).count() == 0
+
+
+def test_diff_keys_op_counts(spark, orders):
+    """The tagged compare's op counts equal the planted drift: dropped
+    rows are inserts, mutated rows updates, slave-only rows deletes."""
+    key = F.col("o_orderkey")
+    excess = orders.where(key % 101 == 0).withColumn(
+        "o_orderkey", key + 10_000_000
+    )
+    slave = _perturbed(orders).unionByName(excess)
+    dropped = orders.select(*PK).subtract(slave.select(*PK)).count()
+    extra = slave.select(*PK).subtract(orders.select(*PK)).count()
+    m2 = orders.select(*PK, F.col("o_totalprice").alias("m_price"))
+    s2 = slave.select(*PK, F.col("o_totalprice").alias("s_price"))
+    mutated = (
+        s2.join(m2, PK).where(F.col("s_price") != F.col("m_price")).count()
+    )
+    assert dropped > 0 and mutated > 0 and extra > 0
+    counts = dict(_tag(orders, slave).groupBy("op").count().collect())
+    assert counts == {"insert": dropped, "update": mutated, "delete": extra}
+
+
+def test_diff_keys_hashes_each_side_once(orders):
+    """Plan guard: the tagged frame computes the md5 row hash once per
+    side — one compare, not a re-hash per output branch."""
+    tagged = _tag(orders, _perturbed(orders))
+    plan = tagged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("md5(") == 2
+
+
+def test_digests_equal_runs_in_callers_job_group(spark, orders):
+    """The digest jobs carry the caller's job group (and so its FAIR
+    pool and cancellation): no driver thread drops local properties."""
+    sc = spark.sparkContext
+    group = "digest-job-group-probe"
+    sc.setJobGroup(group, "probe")
+    try:
+        digests_equal(orders, _perturbed(orders))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
 
 
 def test_differing_partitions(spark, orders):
@@ -140,13 +193,12 @@ def test_differing_partitions(spark, orders):
     assert parts == {dropped_val: "missing", mutated_val: "differs"}
 
 
-def test_merge_tables_single_pass(spark, orders):
-    """merge_tables converges like apply_delta but with a bounded-scan
-    plan (narrow full-outer + two semi joins)."""
-    from mysql_syncer_spark.diff import merge_tables
-
+def test_diff_keys_merge_single_pass(spark, orders):
+    """The diff_keys + apply_delta merge converges with a bounded-scan
+    plan (narrow full-outer key compare + one semi join + one anti
+    join)."""
     slave = _perturbed(orders)
-    merged = merge_tables(orders, slave, PK)
+    merged = _merge(orders, slave)
     assert merged.count() == orders.count()
     assert merged.subtract(orders).count() == 0
     assert orders.subtract(merged).count() == 0

@@ -169,10 +169,12 @@ def test_pushdown_delta_stays_chunk_bounded(spark, master_db, tmp_path):
     slave = DBAPICatalog(spark, _factory(spath))
 
     calls: list[int] = []
+    pools: set = set()
     real_fetch = master.fetch_rows
 
     def spying_fetch(name, keys, pk_cols, chunk_size=5000):
         calls.append(len(keys))
+        pools.add(spark.sparkContext.getLocalProperty("spark.scheduler.pool"))
         return real_fetch(name, keys, pk_cols, chunk_size=chunk_size)
 
     master.fetch_rows = spying_fetch
@@ -184,6 +186,8 @@ def test_pushdown_delta_stays_chunk_bounded(spark, master_db, tmp_path):
     assert len(calls) >= 19
     assert max(calls) <= 16
     assert sum(calls) == 297
+    # the fetch pool's threads run in the unit's FAIR pool
+    assert pools == {"sync-orders"}
 
     def dump(path):
         with sqlite3.connect(path) as conn:
@@ -192,6 +196,40 @@ def test_pushdown_delta_stays_chunk_bounded(spark, master_db, tmp_path):
             ).fetchall()
 
     assert dump(master_db) == dump(spath)
+
+
+def test_pushdown_dry_run_writes_changelog(spark, master_db, tmp_path):
+    """dry_run + hash_pushdown + changelog_path writes the changelog
+    (the what-WOULD-change artifact), as the plain path does, and
+    leaves the slave untouched."""
+    spath = str(tmp_path / "slave.db")
+    slave_rows = [r for r in _orders_rows() if r[0] % 13 != 0] + [
+        (10_000, 1, "X", 0, "excess")
+    ]
+    with sqlite3.connect(spath) as s:
+        s.execute(ORDERS_DDL)
+        s.executemany("INSERT INTO orders VALUES (?,?,?,?,?)", slave_rows)
+
+    def dump(path):
+        with sqlite3.connect(path) as conn:
+            return conn.execute(
+                "SELECT * FROM orders ORDER BY o_orderkey"
+            ).fetchall()
+
+    before = dump(spath)
+    log = str(tmp_path / "changelog")
+    master = DBAPICatalog(spark, _factory(master_db))
+    slave = DBAPICatalog(spark, _factory(spath))
+    cfg = SyncConfig(
+        hash_pushdown=True, dry_run=True, changelog_path=log, chunk_size=16
+    )
+    report = sync(master, slave, cfg)
+    assert report.ok, [r.error for r in report.results]
+    assert report.results[0].status == "dry_run"
+    assert dump(spath) == before
+    ops = [r["op"] for r in spark.read.parquet(log).collect()]
+    # 24 dropped keys (k % 13 == 0, k < 300) and 1 excess key
+    assert sorted(ops) == ["delete"] + ["insert"] * 24
 
 
 def test_pushdown_requires_capable_master(spark, tmp_path, master_db):

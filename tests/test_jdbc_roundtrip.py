@@ -18,7 +18,8 @@ import sqlite3
 import pytest
 from pyspark.sql import functions as F
 
-from mysql_syncer_spark.diff import diff_tables
+from mysql_syncer_spark.canon import with_row_hash
+from mysql_syncer_spark.diff import diff_keys, rows_to_copy
 from mysql_syncer_spark.sinks.jdbc import (
     apply_deletes,
     apply_inserts,
@@ -26,6 +27,11 @@ from mysql_syncer_spark.sinks.jdbc import (
 )
 
 COLS = ["o_orderkey", "o_custkey", "o_status", "o_totalprice", "o_comment"]
+PK = ["o_orderkey"]
+
+
+def _tag(master, slave):
+    return diff_keys(with_row_hash(master, PK), with_row_hash(slave, PK), PK)
 
 
 def _connect_factory(path):
@@ -84,19 +90,17 @@ def test_delete_insert_roundtrip_converges(spark, dbs):
     mpath, spath = dbs
     master = _read_table(spark, mpath, "orders")
     slave = _read_table(spark, spath, "orders")
-    d = diff_tables(master, slave, ["o_orderkey"])
+    tagged = _tag(master, slave)
+    deletes = tagged.where(F.col("op") != "insert").select(*PK)
+    inserts = rows_to_copy(master, tagged.where(F.col("op") != "delete"), PK)
     factory = _connect_factory(spath)
-    apply_deletes(
-        d["delete"], "orders", ["o_orderkey"], factory,
-        chunk_size=64, quote='"',
-    )
-    apply_inserts(d["insert"], "orders", factory, chunk_size=64, quote='"')
+    apply_deletes(deletes, "orders", PK, factory, chunk_size=64, quote='"')
+    apply_inserts(inserts, "orders", factory, chunk_size=64, quote='"')
     after = _read_table(spark, spath, "orders")
     assert after.subtract(master).count() == 0
     assert master.subtract(after).count() == 0
     # idempotence: a second diff is empty
-    d2 = diff_tables(master, after, ["o_orderkey"])
-    assert d2["insert"].count() == 0 and d2["delete"].count() == 0
+    assert _tag(master, after).count() == 0
 
 
 def test_replace_upsert_roundtrip(spark, dbs):

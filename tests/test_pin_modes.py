@@ -36,7 +36,7 @@ class TestPinModes:
     # runs FIRST (file order): the all-modes test below sets the
     # session checkpoint dir, after which "no dir" can't be exercised
     def test_reliable_without_dir_raises(self, spark, docs, _restore_mode):
-        if not spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+        if spark.sparkContext.getCheckpointDir() is not None:
             pytest.skip("session already has a checkpoint dir")
         spark.conf.set(PIN_MODE_CONF, "reliable")
         with pytest.raises(ValueError, match="checkpoint dir"):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mysql_syncer_spark.canon import with_row_hash
-from mysql_syncer_spark.diff import diff_tables, merge_tables
+from mysql_syncer_spark.diff import apply_delta, diff_keys, rows_to_copy
 from mysql_syncer_spark.digest import digests_equal
 
 SCHEMA = T.StructType(
@@ -59,14 +59,17 @@ def test_merge_converges_on_random_tables(spark, rows, perturb):
                 F.coalesce(F.col("a"), F.lit(0)) + 100,
             ).otherwise(F.col("a")),
         )
-    merged = merge_tables(master, slave, ["id"])
+    pk = ["id"]
+    tagged = diff_keys(with_row_hash(master, pk), with_row_hash(slave, pk), pk)
+    inserts = rows_to_copy(master, tagged.where(F.col("op") != "delete"), pk)
+    merged = apply_delta(slave, inserts, tagged, pk)
     # convergence: merged ≡ master (exact multiset equality)
     assert merged.exceptAll(master).count() == 0
     assert master.exceptAll(merged).count() == 0
     # idempotence: digests agree and a re-diff plans nothing
     assert digests_equal(master, merged)
-    d = diff_tables(master, merged, ["id"], mode="pk_hash")
-    assert d["insert"].count() == 0 and d["delete"].count() == 0
+    rediff = diff_keys(with_row_hash(master, pk), with_row_hash(merged, pk), pk)
+    assert rediff.count() == 0
 
 
 @pytest.mark.slow
