@@ -47,7 +47,10 @@ class SyncConfig:
     #: (settings.php.tmpl:45, Synchronizer.php:213-222)
     copy_tables_with_no_primary: bool = True
     #: JDBC write batch size — the reference's CHUNK_SIZE=5000
-    #: (settings.php.tmpl:32-34); irrelevant for parquet mode
+    #: (settings.php.tmpl:32-34). When a statement log or changelog
+    #: reads the delta, it also sets the delta's partitions:
+    #: ⌈rows / chunk_size⌉, streamed by the log and written by the sinks
+    #: one connection each (parquet mode included, via the changelog)
     chunk_size: int = 5000
     #: concurrent sync units (reference: ThreadWrapper.jar <cores>)
     max_parallel_tables: int = 8

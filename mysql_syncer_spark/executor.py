@@ -34,6 +34,7 @@ from mysql_syncer_spark.canon import HASH_COL, with_row_hash
 from mysql_syncer_spark.config import SyncConfig, TableHandle
 from mysql_syncer_spark.diff import OP_COL, apply_delta, diff_keys, rows_to_copy
 from mysql_syncer_spark.digest import digests_equal, differing_partitions
+from mysql_syncer_spark.pin import pin
 from mysql_syncer_spark.plans.plan import Action, SyncPlan, SyncUnit, plan_sync
 from mysql_syncer_spark.sinks import jdbc
 from mysql_syncer_spark.sources.catalog import ParquetCatalog
@@ -66,6 +67,12 @@ class SyncReport:
             "inserted": sum(r.inserted for r in self.results),
             "deleted": sum(r.deleted for r in self.results),
         }
+
+
+def _chunked(df, rows: int, chunk_size: int):
+    """``df`` coalesced to ``⌈rows / chunk_size⌉`` partitions (at least
+    one): each partition is about one ``chunk_size`` batch."""
+    return df.coalesce(max(1, -(-rows // chunk_size)))
 
 
 class ParquetSyncExecutor:
@@ -369,7 +376,11 @@ class ParquetSyncExecutor:
         ``tagged`` is :func:`diff_keys`' ``(pk..., op)`` frame;
         ``fetch_inserts`` maps the upsert keys to ``(insert rows, spill
         dir or None)`` — the only step in which the two paths differ.
-        ``target`` is the slave frame the parquet merge rewrites."""
+        ``target`` is the slave frame the parquet merge rewrites. With a
+        log sink the upsert rows are pinned once and both delta frames
+        go to the log and the apply in ``⌈rows / chunk_size⌉``
+        partitions; without one the delta has a single consumer and
+        stays unpinned."""
         tagged = tagged.persist()
         spill = None
         try:
@@ -383,8 +394,9 @@ class ParquetSyncExecutor:
             if not n:
                 res.status = "noop"
                 return
-            if (self.cfg.dry_run and self._stmt_log is None
-                    and self.cfg.changelog_path is None):
+            logged = (self._stmt_log is not None
+                      or self.cfg.changelog_path is not None)
+            if self.cfg.dry_run and not logged:
                 res.status = "dry_run"
                 return
             # the log sinks need the full insert rows even under dry_run
@@ -394,6 +406,18 @@ class ParquetSyncExecutor:
                 tagged.where(op != "delete").select(*pk_cols)
             )
             deletes = tagged.where(op != "insert").select(*pk_cols)
+            if logged:
+                # a log sink reads the delta besides the apply: pin the
+                # upsert rows once, so the log and the writes describe
+                # the same rows even if the master changes in between,
+                # and stream both frames in chunk-sized partitions —
+                # O(delta / chunk_size) jobs and sink connections, not
+                # one per partition of the master scan
+                chunk = self.cfg.chunk_size
+                inserts = _chunked(
+                    pin(inserts, required=True), res.inserted, chunk
+                )
+                deletes = _chunked(deletes, res.deleted, chunk)
             self._log_delta(table, pk_cols, inserts, deletes)
             if self.cfg.dry_run:
                 res.status = "dry_run"
@@ -516,8 +540,18 @@ class ParquetSyncExecutor:
                 for u in diff:   # serial fallback (Synchronizer.php:93-101)
                     report.results.append(self.run_unit(u))
             else:
+                # the unit threads keep the caller's local properties
+                # (job group, description). One wrapper per unit: a
+                # wrapper hands every call the SAME cloned properties,
+                # and each unit sets its own FAIR pool in its copy
                 with ThreadPoolExecutor(max_workers=workers) as pool:
-                    report.results.extend(pool.map(self.run_unit, diff))
+                    futures = [
+                        pool.submit(
+                            inheritable_thread_target(self.spark)(self.run_unit), u
+                        )
+                        for u in diff
+                    ]
+                    report.results.extend(f.result() for f in futures)
         return report
 
 

@@ -98,8 +98,7 @@ def plan_sync(
 
     for t in sorted(m_tables & s_tables):
         mh = master.table(t)
-        sh = slave.table(t)
-        if not schemas_match(mh.df.schema, sh.df.schema):
+        if not schemas_match(mh.df.schema, slave.table_schema(t)):
             units.append(SyncUnit(t, Action.FULL_COPY, "schema drift"))
             continue
         if not mh.has_pk:

@@ -17,9 +17,11 @@ batches over delta DataFrames:
   memory — partitions stream through ``itertools.islice``.
 
 At 100 TB the delta frames are small by construction (only changed
-rows), and the write parallelism equals the delta's partition count —
-``df.repartition(n)`` upstream is the knob for target-DB write
-concurrency.
+rows), and the write parallelism equals the delta's partition count,
+one connection per partition. When a statement log or changelog reads
+the delta too, the executor coalesces it to ``⌈rows / chunk_size⌉``
+partitions, so each connection writes about one chunk; otherwise the
+delta keeps the partitions of the plan that produced it.
 """
 
 from __future__ import annotations

@@ -17,9 +17,20 @@ order as :func:`~mysql_syncer_spark.sinks.jdbc.apply_replace`, so the
 log is byte-for-byte the statement stream the distributed sinks issue
 (modulo partition interleaving, which the file serializes).
 
-Scale note: a single SQL file is an inherently serial artifact. The
-emitter streams delta frames through ``toLocalIterator`` (driver memory
-stays one-chunk-bounded at any delta size), but emitting a 100 TB first
+Concurrency: the file is serial, its rendering is not. Each block
+(one table's drop, full copy or delta) renders into a private
+temporary file beside the log with no lock held, so concurrent sync
+units run their Spark jobs side by side; only appending the finished
+block to the log takes the lock. A block is therefore contiguous in the
+file, and a render that fails appends nothing — the log never holds a
+table's DELETEs without their INSERTs.
+
+Scale note: the emitter streams delta frames through
+``toLocalIterator``, one Spark job per partition of the frame; the
+executor hands it deltas coalesced to ``⌈rows / chunk_size⌉``
+partitions, so a delta streams in chunk-sized partitions whatever the
+master's file count. Driver memory stays one-partition-bounded (the
+rendered block is on disk, not in RAM), but emitting a 100 TB first
 sync as SQL text is not the intended use — the log is for audit and
 replay of incremental deltas, like the reference's.
 """
@@ -27,6 +38,9 @@ replay of incremental deltas, like the reference's.
 from __future__ import annotations
 
 import itertools
+import os
+import shutil
+import tempfile
 import threading
 from typing import Sequence
 
@@ -42,9 +56,10 @@ from mysql_syncer_spark.sinks.jdbc import (
 class StatementLog:
     """Append-ordered SQL file; one instance per sync run.
 
-    Thread-safe: concurrent sync units (FAIR-pool tables) serialize on
-    a lock per logical block, so one table's statements are contiguous
-    in the file even under ``max_parallel_tables > 1``.
+    Thread-safe: concurrent sync units (FAIR-pool tables) render their
+    blocks concurrently, each into its own temporary file, and append a
+    finished block under a lock, so one table's statements are
+    contiguous in the file even under ``max_parallel_tables > 1``.
     """
 
     def __init__(
@@ -66,9 +81,22 @@ class StatementLog:
             )
 
     def _append(self, lines) -> None:
-        with self._lock, open(self.path, "a") as f:
-            for line in lines:
-                f.write(line)
+        """Render ``lines`` into a temporary file in the log's directory
+        (no lock held: the generator runs the Spark jobs), then append
+        the whole block under the lock. A failed render appends
+        nothing."""
+        fd, tmp = tempfile.mkstemp(
+            dir=os.path.dirname(os.path.abspath(self.path)),
+            prefix=os.path.basename(self.path) + ".", suffix=".block",
+        )
+        try:
+            with os.fdopen(fd, "w") as f:
+                for line in lines:
+                    f.write(line)
+            with self._lock, open(tmp) as src, open(self.path, "a") as dst:
+                shutil.copyfileobj(src, dst)
+        finally:
+            os.remove(tmp)
 
     # -- statement blocks (each call = one contiguous file block) ------
 

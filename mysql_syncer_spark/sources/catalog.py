@@ -30,6 +30,7 @@ from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mysql_syncer_spark.config import TableHandle
 
@@ -77,6 +78,12 @@ class Catalog:
 
     def table(self, name: str) -> TableHandle:
         raise NotImplementedError
+
+    def table_schema(self, name: str) -> T.StructType:
+        """The table's Spark schema — what planning compares. Equal to
+        ``table(name).df.schema``; catalogs whose :meth:`table` reads
+        rows eagerly override it with a metadata-only read."""
+        return self.table(name).df.schema
 
     def has_table(self, name: str) -> bool:
         return name in self.table_names()

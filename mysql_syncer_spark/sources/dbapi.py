@@ -186,34 +186,25 @@ class DBAPICatalog(Catalog):
         self._names = None
 
     def table(self, name: str) -> TableHandle:
+        cols, pk, schema = self.table_meta(name)
+        q = self.quote
+        col_list = ", ".join(f"{q}{c}{q}" for c in cols)
         conn = self.connect_factory()
         try:
-            info = self._table_info(conn, name)
-            if not info:
-                raise ValueError(f"no such table: {name}")
-            cols = [c for c, _, _ in info]
-            schema = T.StructType(
-                [T.StructField(c, self._to_spark_type(d), True)
-                 for c, d, _ in info]
-            )
-            q = self.quote
-            col_list = ", ".join(f"{q}{c}{q}" for c in cols)
             rows = self._run(conn, f"SELECT {col_list} FROM {q}{name}{q}")
         finally:
             conn.close()
-        pk = self.pk_map.get(name)
-        if pk is None:
-            by_ord = sorted(
-                ((o, c) for c, _, o in info if o > 0)
-            )
-            pk = tuple(c for _, c in by_ord)
-        df = self._rows_to_df(rows, schema)
         return TableHandle(
             name=name,
-            df=df,
-            pk_cols=tuple(pk),
+            df=self._rows_to_df(rows, schema),
+            pk_cols=pk,
             partition_col=self.partition_map.get(name),
         )
+
+    def table_schema(self, name: str) -> T.StructType:
+        """The schema from :meth:`table_meta` — planning must not pull
+        every row through the driver to learn it."""
+        return self.table_meta(name)[2]
 
     # -- server-side hash pushdown (SURVEY §4 row 2) -------------------
 

@@ -190,3 +190,19 @@ def test_keyed_fetch_error_cleans_spill_and_propagates(spark, tmp_path):
         ex._stream_keyed_fetch("orders", miss, ["o_orderkey"])
     after = set(glob.glob(tempfile.gettempdir() + "/syncer_fetch_*"))
     assert after - before == set()  # spill dir removed on the error path
+
+
+def test_plan_reads_slave_schema_without_rows(spark, dbs, monkeypatch):
+    """Planning reads a DBAPI slave's schema from metadata alone: the
+    schema equals the one table() returns, and table() is not called."""
+    mpath, spath = dbs
+    slave = DBAPICatalog(spark, _factory(spath))
+    for t in slave.table_names():
+        assert slave.table_schema(t) == slave.table(t).df.schema, t
+
+    def no_rows(name):
+        raise AssertionError(f"planning fetched the rows of {name}")
+
+    monkeypatch.setattr(slave, "table", no_rows)
+    plan = plan_sync(DBAPICatalog(spark, _factory(mpath)), slave)
+    assert any(u.action == Action.DIFF_SYNC for u in plan)

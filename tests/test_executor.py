@@ -257,3 +257,40 @@ class TestExternalWriterResilience:
         # and a third run is a clean noop
         rep3 = sync(mc, sc)
         assert all(r.status == "noop" for r in rep3.results), rep3.results
+
+
+def test_units_keep_callers_job_group(spark, sf_dir, pair, monkeypatch):
+    """run()'s unit threads inherit the caller's local properties: the
+    jobs of concurrent units carry the job group set before sync(), and
+    each unit still runs in its own FAIR pool."""
+    from mysql_syncer_spark import executor
+
+    mdir, sdir, write = pair
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    write("orders", orders, orders.where(F.col("o_orderkey") % 50 != 0))
+    write("customer", customer,
+          customer.where(F.col("c_custkey") % 7 != 0))
+    sc = spark.sparkContext
+    seen = {}
+    orig = executor.digests_equal
+
+    def probe(m, s):
+        seen[sc.getLocalProperty("spark.scheduler.pool")] = (
+            sc.getLocalProperty("spark.jobGroup.id")
+        )
+        return orig(m, s)
+
+    monkeypatch.setattr(executor, "digests_equal", probe)
+    group = "sync-unit-job-group-probe"
+    sc.setJobGroup(group, "probe")
+    try:
+        rep = sync(ParquetCatalog(spark, mdir), ParquetCatalog(spark, sdir),
+                   SyncConfig(max_parallel_tables=2))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert rep.ok, [r.error for r in rep.results if r.status == "error"]
+    assert seen == {"sync-orders": group, "sync-customer": group}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4
