@@ -210,7 +210,8 @@ class DBAPICatalog(Catalog):
 
     def table_meta(self, name: str):
         """(columns, pk_cols, spark schema) WITHOUT fetching any rows —
-        the pushdown path must never pull the table to learn its shape."""
+        planning and the pushdown path must never pull the table to
+        learn its shape."""
         conn = self.connect_factory()
         try:
             info = self._table_info(conn, name)
